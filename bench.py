@@ -7,7 +7,7 @@ Workload = the engine's headline paths at $SPARK_GRAFT_SF_DIR (default
   dm_full        Direct-Map the whole star schema -> distinct triples
   r2rml_join     R2RML mapping with ref-object join orders x customer
   kg_pipeline    interleaved corpus -> spans -> relations -> link -> CC ->
-                 distinct triples (checkpoint-free variant; N docs scale
+                 distinct triples (checkpointed stages; N docs scale
                  with SPARK_GRAFT_BENCH_DOCS, default 1M)
   dedup_minhash  MinHash-LSH near-dup pairs over documents
   ann_topk       LSH top-k (multiprobe) for 16 queries over embeddings
@@ -128,11 +128,12 @@ def main() -> None:
 
     aux["r2rml_triples"] = run("r2rml_join", r2rml_join)
 
-    # 3. interleaved KG pipeline (checkpoint-free; includes final bucketed
-    # write). The synthetic corpus is materialized to parquet OUTSIDE the
-    # timed section — corpus synthesis is harness cost, and reading the same
-    # parquet at both parallelism levels makes the scaling comparison run on
-    # literally the same input (north_rule).
+    # 3. interleaved KG pipeline (checkpointed stages in a fresh temp
+    # workdir per rep; includes final bucketed write). The synthetic corpus
+    # is materialized to parquet OUTSIDE the timed section — corpus
+    # synthesis is harness cost, and reading the same parquet at both
+    # parallelism levels makes the scaling comparison run on literally the
+    # same input (north_rule).
     corpus_dir = os.environ.get("SPARK_GRAFT_CORPUS_DIR") or os.path.join(
         "/tmp", f"spark_graft_corpus_{BENCH_DOCS}"
     )
@@ -150,9 +151,7 @@ def main() -> None:
 
         docs = spark.read.parquet(corpus_dir)
         with tempfile.TemporaryDirectory() as wd:
-            r = run_pipeline(
-                spark, docs, wd, n_buckets=CPUS, audit_invariant=False, checkpoint=False
-            )
+            r = run_pipeline(spark, docs, wd, n_buckets=CPUS, audit_invariant=False)
             return r.triples.count()
 
     aux["kg_triples"] = run("kg_pipeline", kg_pipeline)

@@ -158,8 +158,7 @@ def main() -> None:
             with tempfile.TemporaryDirectory() as wd:
                 t0 = time.time()
                 r = run_pipeline(
-                    spark, docs, wd, n_buckets=CPUS,
-                    audit_invariant=False, checkpoint=False,
+                    spark, docs, wd, n_buckets=CPUS, audit_invariant=False
                 )
                 n = r.triples.count()
                 laps.append(round(time.time() - t0, 3))

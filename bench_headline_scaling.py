@@ -135,9 +135,7 @@ def child(job: str, master: str, cores: int) -> None:
         docs = spark.read.parquet(CORPUS_DIR)
         t0 = time.time()
         with tempfile.TemporaryDirectory() as wd:
-            r = run_pipeline(
-                spark, docs, wd, n_buckets=32, audit_invariant=False, checkpoint=False
-            )
+            r = run_pipeline(spark, docs, wd, n_buckets=32, audit_invariant=False)
             n = r.triples.count()
         wall = time.time() - t0
         stages = {

@@ -15,8 +15,7 @@ Scale notes (100 TB framing):
   (:func:`..iri.iri_safe_col`). No Python workers anywhere in the hot path.
 - Each pattern re-reads only the columns it references — Catalyst prunes the
   parquet/Iceberg scan per branch, so the union of N patterns costs N narrow
-  scans, not N full-width scans. For sources feeding many patterns, pass
-  ``persist_sources=True`` to scan once and reuse.
+  scans, not N full-width scans.
 - Ref-object joins (R2RML §8, O13) are null-rejecting equi-joins; Spark
   picks broadcast/SMJ via stats + AQE. Pass ``broadcast_parents={'dept'}``
   to force-broadcast small dimension maps, matching the north_star
@@ -77,10 +76,6 @@ def _cached_col(key, build) -> Column:
 
 def _lit(v) -> Column:
     return _cached_col(("lit", v), lambda: F.lit(v))
-
-
-def _ccol(name: str) -> Column:
-    return _cached_col(("col", name), lambda: F.col(name))
 
 
 def _notnull(name: str) -> Column:
@@ -334,14 +329,11 @@ def compile_triples_map(
     tm: TriplesMap,
     tables: dict[str, DataFrame] | None = None,
     broadcast_parents: set[str] | None = None,
-    persist_sources: bool = False,
 ) -> list[DataFrame]:
     """Compile one triples map into a list of 8-column pattern DataFrames."""
     if tm.subject is None:
         raise CompileError(f"triples map {tm.name!r} has no subject map")
     df = resolve_source(spark, tm, tables)
-    if persist_sources:
-        df = df.persist()
     schema = df.schema
     subj = compile_term(tm.subject, schema)
     out: list[DataFrame] = []
@@ -436,47 +428,12 @@ def _ref_object_patterns(
     return out
 
 
-# Compiled-mapping memo (r8; guide §1.2 "per-task work" applied to the
-# DRIVER: plan construction is the per-run fixed cost the bench pays on
-# every repetition). A whole-schema map builds ~100 pattern branches; each
-# eager Dataset transformation is a py4j round-trip chain, measured ~0.8s
-# per dm_full build. The compiled DataFrame is a pure function of
-# (mapping document, resolved source plans, flags), so an identical
-# compilation request within one SparkContext can reuse the previously
-# built plan object. This memoizes PLANS only, never data or results:
-# every action on the returned DataFrame still computes from the parquet
-# inputs. Correctness never rests on a hash — a cache hit is honored only
-# after every triples map's CURRENT resolved source passes Spark's exact
-# ``sameSemantics`` check against the source captured at build time (a
-# re-bound temp view or a different DataFrame under the same table name
-# misses and recompiles).
-_COMPILE_MEMO: dict = {}
-_COMPILE_MEMO_CAP = 64
-
-
-def _compile_memo_key(
-    spark: SparkSession,
-    mapping: Mapping,
-    dedup: bool,
-    broadcast_parents: set[str] | None,
-    persist_sources: bool,
-):
-    return (
-        id(spark.sparkContext._jsc),
-        mapping.to_json(sort_keys=True),
-        dedup,
-        tuple(sorted(broadcast_parents or ())),
-        persist_sources,
-    )
-
-
 def compile_mapping(
     spark: SparkSession,
     mapping: Mapping,
     tables: dict[str, DataFrame] | None = None,
     dedup: bool = True,
     broadcast_parents: set[str] | None = None,
-    persist_sources: bool = False,
 ) -> DataFrame:
     """Compile a whole mapping document into one triples DataFrame.
 
@@ -486,24 +443,6 @@ def compile_mapping(
     spillable replacement for RDF::Trine::Model's O(N)-memory set insert,
     SURVEY.md §5 'Dedup').
     """
-    try:
-        key = _compile_memo_key(
-            spark, mapping, dedup, broadcast_parents, persist_sources
-        )
-    except Exception:  # noqa: BLE001 - e.g. coderef term maps: not memoizable
-        key = None
-    hit = _COMPILE_MEMO.get(key) if key is not None else None
-    if hit is not None:
-        cached_sources, cached_df = hit
-        try:
-            if all(
-                resolve_source(spark, mapping.triples_maps[name], tables).sameSemantics(src)
-                for name, src in cached_sources.items()
-            ):
-                return cached_df
-        except Exception:  # noqa: BLE001 - e.g. a dropped temp view: recompile
-            pass
-
     patterns: list[DataFrame] = []
     for tm in mapping.triples_maps.values():
         patterns.extend(
@@ -513,7 +452,6 @@ def compile_mapping(
                 tm,
                 tables=tables,
                 broadcast_parents=broadcast_parents,
-                persist_sources=persist_sources,
             )
         )
     if not patterns:
@@ -521,16 +459,6 @@ def compile_mapping(
     df = union_all(patterns)
     if dedup:
         df = df.dropDuplicates(TRIPLE_COLUMNS)
-    if key is not None:
-        if len(_COMPILE_MEMO) >= _COMPILE_MEMO_CAP:
-            _COMPILE_MEMO.clear()
-        _COMPILE_MEMO[key] = (
-            {
-                name: resolve_source(spark, tm, tables)
-                for name, tm in mapping.triples_maps.items()
-            },
-            df,
-        )
     return df
 
 

@@ -32,7 +32,6 @@ Everything compiles to the shared Mapping IR -> one executor
 
 from __future__ import annotations
 
-import json
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -42,11 +41,6 @@ from pyspark.sql import types as T
 from .ir import Mapping, PredicateObjectMap, TermMap, TriplesMap
 from .iri import iri_safe_py
 from .terms import KIND_BLANK, KIND_IRI, KIND_LITERAL, RDF_TYPE, natural_datatype
-
-
-def load_manifest(path: str) -> dict[str, Any]:
-    with open(path) as f:
-        return json.load(f)
 
 
 def _row_node_template(base: str, table: str, pk: list[str]) -> str:
@@ -218,13 +212,17 @@ def _pattern_lut(vals: list[str | None]) -> Any:
     Built as ONE ``F.expr`` instead of ``F.array(*[F.lit(v).cast(...)])``:
     each lit+cast is two eager py4j round-trips, and three luts of ~13-20
     entries per table measured ~0.5s of every dm_full plan build (the bench
-    pays construction per rep; guide §1). The SQL literal escaping covers
-    the only metacharacters a string literal has (backslash, quote)."""
+    pays construction per rep; guide §1). A value holding a backslash or
+    quote goes in as a hex binary literal cast to string: how a backslash
+    reads inside a string literal depends on
+    ``spark.sql.parser.escapedStringLiterals``, a hex literal does not."""
 
     def q(v: str | None) -> str:
         if v is None:
             return "NULL"
-        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+        if "\\" in v or "'" in v:
+            return f"cast(X'{v.encode().hex()}' as string)"
+        return f"'{v}'"
 
     items = ",".join(q(v) for v in vals)
     return F.expr(

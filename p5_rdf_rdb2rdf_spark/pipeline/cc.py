@@ -17,9 +17,38 @@ Scale mechanics:
 
 from __future__ import annotations
 
+from collections.abc import Iterable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+# Edge count at or below which components are computed driver-side (see
+# connected_components); also the s4 canonicalization's threshold.
+DRIVER_THRESHOLD = 200_000
+
+
+def union_find(edges: Iterable[tuple]) -> dict:
+    """Driver-side union-find over (u, v) edges -> {node: min node of its
+    component}. Unions keep the smaller root, so every root is its
+    component's minimum."""
+    parent: dict = {}
+
+    def find(x):
+        r = x
+        while parent[r] != r:
+            r = parent[r]
+        while parent[x] != r:  # path compression
+            parent[x], x = r, parent[x]
+        return r
+
+    for u, v in edges:
+        parent.setdefault(u, u)
+        parent.setdefault(v, v)
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            parent[max(ru, rv)] = min(ru, rv)
+    return {n: find(n) for n in parent}
 
 
 def connected_components(
@@ -27,7 +56,7 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 64,
-    driver_threshold: int = 200_000,
+    driver_threshold: int = DRIVER_THRESHOLD,
     size_hint: int | None = None,
     stats: dict | None = None,
     frontier_broadcast_rows: int = 1_000_000,
@@ -107,29 +136,7 @@ def connected_components(
         else:
             sample = None
         if sample is not None and len(sample) <= driver_threshold:
-            parent: dict = {}
-
-            def find(x):
-                r = x
-                while parent[r] != r:
-                    r = parent[r]
-                while parent[x] != r:  # path compression
-                    parent[x], x = r, parent[x]
-                return r
-
-            for row in sample:
-                for n in (row.u, row.v):
-                    if n not in parent:
-                        parent[n] = n
-                ru, rv = find(row.u), find(row.v)
-                if ru != rv:
-                    parent[ru] = rv
-            comp_min: dict = {}
-            for n in parent:
-                r = find(n)
-                if r not in comp_min or n < comp_min[r]:
-                    comp_min[r] = n
-            rows = [(n, comp_min[find(n)]) for n in sorted(parent)]
+            rows = sorted(union_find((row.u, row.v) for row in sample).items())
             schema = T.StructType(
                 [
                     T.StructField("node", node_type, False),

@@ -15,7 +15,9 @@ Every stage checkpoints through :class:`..io.checkpoint.StageCheckpointer`
 
 from __future__ import annotations
 
+from collections.abc import Iterable
 from dataclasses import dataclass
+from typing import Literal
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -23,7 +25,7 @@ from pyspark.sql import functions as F
 from ..io.checkpoint import StageCheckpointer
 from ..io.graph_table import GraphTable
 from ..terms import KIND_IRI
-from .cc import canonical_mapping, connected_components
+from .cc import DRIVER_THRESHOLD, canonical_mapping, connected_components, union_find
 from .corpus import KG, TEMPLATES, entity_vocab
 from .linking import candidate_edges, entity_dictionary
 from .mentions import extract_relations
@@ -126,45 +128,16 @@ def build_triples(relations: DataFrame, canon: DataFrame) -> DataFrame:
     )
 
 
-class _NullCheckpointer:
-    """In-memory stage runner (benchmarks / exploratory runs): identical
-    control flow, no per-stage parquet writes. Multi-consumer stage outputs
-    are persisted and materialized once — without this every downstream
-    consumer re-runs the whole upstream chain (corpus synthesis + pandas-UDF
-    extraction), which measured ~5x slower than the stage sum.
-
-    Stages named in ``fuse`` have exactly ONE downstream consumer, so their
-    persist+count is pure overhead — an extra barrier plus a cache
-    write+read of the pipeline's largest frames (spans, triples). Fused
-    stages stay lazy and whole-stage-codegen/Arrow-fuse into their consumer;
-    their lineage rows are recorded as None (the checkpointed path, which is
-    the resume/lineage contract, always materializes and counts)."""
-
-    def __init__(self, fuse: set[str] | None = None) -> None:
-        self._lineage: dict = {"stages": {}}
-        self._fuse = fuse or set()
-
-    def run_stage(self, stage, fn, inputs=None, meta=None, force=False):
-        import time
-
-        t0 = time.time()
-        if stage in self._fuse:
-            df = fn()
-            rows = None  # stays lazy: fused into the single consumer
-        else:
-            df = fn().persist()
-            rows = df.count()  # materialize now; later stages reuse the cache
-        self._lineage["stages"][stage] = {
-            "inputs": inputs or [],
-            "meta": meta or {},
-            "rows": rows,
-            "fused": stage in self._fuse,
-            "wall_sec": round(time.time() - t0, 2),
-        }
-        return df
-
-    def lineage(self) -> dict:
-        return self._lineage
+def canonical_surfaces(edges: Iterable[tuple[str, str]]) -> list[tuple[str, str]]:
+    """Driver-side s4 over ``s:``/``e:``-prefixed link edges -> sorted
+    (surface, canonical entity id) rows. The twin of ``canonical_mapping``
+    over ``connected_components``: a component's canonical is its min
+    ``e:`` member, which is its min node because every ``e:`` node sorts
+    before every ``s:`` node; components with no entity node drop out."""
+    comp = union_find(edges)
+    return sorted(
+        (n[2:], c[2:]) for n, c in comp.items() if n.startswith("s:") and c.startswith("e:")
+    )
 
 
 def run_pipeline(
@@ -173,22 +146,15 @@ def run_pipeline(
     workdir: str,
     n_buckets: int = 32,
     audit_invariant: bool = True,
-    checkpoint: bool = True,
+    checkpoint: Literal[True] = True,
 ) -> PipelineResult:
-    if checkpoint:
-        ckpt = StageCheckpointer(spark, workdir)
-    else:
-        # single-consumer stages fuse into their consumer (no persist/count
-        # barrier): triples -> fused distinct+write always; s4's canon map
-        # -> the s5 broadcast (r8: its input is either a driver-local
-        # relation from the fast path or the CC output, and s5 is its only
-        # consumer — the persist+count was one pure-scheduling job per run);
-        # spans -> relation extraction unless the invariant audit needs
-        # spans twice
-        fuse = {"s5_triples", "s4_canon"} | (
-            set() if audit_invariant else {"s1_spans"}
-        )
-        ckpt = _NullCheckpointer(fuse=fuse)
+    """Run s1-s6 over ``docs``, checkpointing every stage under ``workdir``.
+
+    ``checkpoint`` is kept for callers that pass it explicitly; every run
+    checkpoints, so any other value is rejected."""
+    if checkpoint is not True:
+        raise ValueError("run_pipeline always checkpoints; pass checkpoint=True or omit it")
+    ckpt = StageCheckpointer(spark, workdir)
     vocab = entity_vocab()
     dictionary = entity_dictionary(spark, vocab)
 
@@ -204,9 +170,9 @@ def run_pipeline(
         """s2 output carries surfaces DICTIONARY-ENCODED to 128-bit digest
         pairs (xxhash64 seeds 0/1, the exact_dedup key discipline), not
         strings (VERDICT r5 next-round #5): every downstream consumer —
-        the s3 mention distinct, the stage cache/checkpoint itself, the s5
+        the s3 mention distinct, the stage checkpoint itself, the s5
         entity-attach probes — keys on 16-byte pairs, so no surface text
-        crosses an exchange or sits in the pipeline's largest cached frame
+        crosses an exchange or sits in the pipeline's largest checkpoint
         after extraction. The surface STRINGS needed for scoring and
         canonicalization come from the broadcast dictionary side (s3), so
         they only ever exist at vocabulary scale, never corpus scale. A
@@ -227,9 +193,9 @@ def run_pipeline(
     relations = ckpt.run_stage("s2_relations", _relations, inputs=["s1_spans"])
 
     def _links() -> DataFrame:
-        # ONE scan of the (cached, 2x|relations|-row) frame: explode the two
-        # digest pairs in place of a union of two full projections — the
-        # union shape read the cache twice and fed the same distinct
+        # ONE scan of the (checkpointed, 2x|relations|-row) frame: explode
+        # the two digest pairs in place of a union of two full projections —
+        # the union shape read the checkpoint twice and fed the same distinct
         # (measured ~25% of s3 wall at 4M docs). The distinct exchange
         # carries 16-byte pairs; the broadcast dictionary (surface strings
         # hashed the same way) restores the string for scoring.
@@ -268,78 +234,35 @@ def run_pipeline(
         # CC runs over vocabulary-sized string nodes (the link graph is
         # corpus-size-invariant); only the OUTPUT mapping is re-encoded to
         # the digest pairs the relations carry, so s5 joins long pairs
-        # instead of strings.
-        #
-        # r8 fast path (guide §1.2 — per-stage work is pure job-scheduling
-        # latency here): when s3 already counted the links frame and it is
-        # at or below connected_components' own driver threshold, the whole
-        # canonicalization — union-find, per-component min-entity canonical,
-        # surface mapping — runs driver-side in one collect instead of ~4
-        # small Spark jobs (size probe, edge collect, local-relation
-        # group/join, stage count). Identical output by construction: the
-        # distributed path's component id is the min node, its canonical is
-        # the min 'e:'-prefixed member, components with no entity node drop
-        # out (inner join) — all reproduced below with the same string
-        # ordering. The distributed path remains for big link graphs.
-        links_rows = ckpt.lineage()["stages"].get("s3_links", {}).get("rows")
-        if links_rows is not None and links_rows <= 200_000:
-            parent: dict = {}
-
-            def find(x):
-                r = x
-                while parent[r] != r:
-                    r = parent[r]
-                while parent[x] != r:  # path compression
-                    parent[x], x = r, parent[x]
-                return r
-
-            for row in links.select("surface", "entity_id").collect():
-                u, v = "s:" + row["surface"], "e:" + row["entity_id"]
-                parent.setdefault(u, u)
-                parent.setdefault(v, v)
-                ru, rv = find(u), find(v)
-                if ru != rv:
-                    parent[max(ru, rv)] = min(ru, rv)
-            members: dict = {}
-            for node in parent:
-                members.setdefault(find(node), []).append(node)
-            out_rows = []
-            for mem in members.values():
-                ents = [m for m in mem if m.startswith("e:")]
-                if not ents:
-                    continue
-                canon_ent = min(ents)[2:]
-                out_rows.extend(
-                    (m[2:], canon_ent) for m in mem if m.startswith("s:")
-                )
+        # instead of strings. When s3's checkpoint counted at most
+        # DRIVER_THRESHOLD links, the whole canonicalization runs
+        # driver-side in one collect instead of ~4 small Spark jobs; the
+        # distributed path remains for big link graphs.
+        if ckpt.lineage()["stages"]["s3_links"]["rows"] <= DRIVER_THRESHOLD:
             import pandas as pd
 
+            rows = canonical_surfaces(
+                ("s:" + r["surface"], "e:" + r["entity_id"])
+                for r in links.select("surface", "entity_id").collect()
+            )
             # pandas -> Arrow local relation (r8): the plain-list path
             # pickles rows through py4j and forces the downstream s5
             # broadcast build through the Python RDD path (see
             # linking.entity_dictionary)
-            local = spark.createDataFrame(
-                pd.DataFrame(sorted(out_rows), columns=["surface", "entity_id"]),
+            surfaces = spark.createDataFrame(
+                pd.DataFrame(rows, columns=["surface", "entity_id"]),
                 "surface string, entity_id string",
             )
-            return local.select(
-                F.xxhash64("surface", F.lit(0)).alias("h0"),
-                F.xxhash64("surface", F.lit(1)).alias("h1"),
-                "entity_id",
-            )
-        comps = connected_components(candidate_edges(links))
-        mapping = canonical_mapping(comps)
-        return (
-            mapping.where(F.col("node").startswith("s:"))
-            .select(
+        else:
+            mapping = canonical_mapping(connected_components(candidate_edges(links)))
+            surfaces = mapping.where(F.col("node").startswith("s:")).select(
                 F.expr("substring(node, 3)").alias("surface"),
                 F.col("canonical_entity").alias("entity_id"),
             )
-            .select(
-                F.xxhash64("surface", F.lit(0)).alias("h0"),
-                F.xxhash64("surface", F.lit(1)).alias("h1"),
-                "entity_id",
-            )
+        return surfaces.select(
+            F.xxhash64("surface", F.lit(0)).alias("h0"),
+            F.xxhash64("surface", F.lit(1)).alias("h1"),
+            "entity_id",
         )
 
     canon = ckpt.run_stage("s4_canon", _canon, inputs=["s3_links"])

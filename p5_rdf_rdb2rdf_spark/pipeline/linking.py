@@ -1,7 +1,7 @@
 """Entity linking: surface forms -> candidate entities, with vectorized
-scoring and skew-aware joins (BASELINE.json north_star: "entity-link scoring
-done in vectorized pandas/Arrow UDFs", "broadcast dictionaries for hot
-entities, salted hash joins for skewed predicates"; SURVEY.md O39).
+scoring against a broadcast dictionary (BASELINE.json north_star:
+"entity-link scoring done in vectorized pandas/Arrow UDFs", "broadcast
+dictionaries for hot entities"; SURVEY.md O39).
 """
 
 from __future__ import annotations
@@ -43,50 +43,6 @@ def link_score(surface: pd.Series, canonical: pd.Series) -> pd.Series:
     exact = (surface == canonical).astype(float)
     lp = (surface.str.len() - canonical.str.len()).abs().clip(upper=10) / 100.0
     return exact + (1.0 - exact) * (0.9 - lp)
-
-
-def link_mentions(
-    mentions: DataFrame,
-    dictionary: DataFrame,
-    surface_col: str = "surface",
-    min_score: float = 0.5,
-) -> DataFrame:
-    """Join mentions to entity candidates and score.
-
-    The dictionary is a hot-entity-skewed small dimension -> **broadcast**
-    (north_star mandate): the join is map-side, no shuffle of the (huge)
-    mention fact table, and a hot surface (20% of docs) can't create a
-    skewed shuffle partition because there is no shuffle.
-    """
-    if "canonical" in dictionary.columns:
-        dict_c = dictionary
-    else:  # dictionaries built elsewhere: derive canonical distributedly
-        canon = dictionary.groupBy("entity_id").agg(F.min("surface").alias("canonical"))
-        dict_c = dictionary.join(F.broadcast(canon), "entity_id")
-    out = mentions.join(
-        F.broadcast(dict_c), mentions[surface_col] == dict_c["surface"], "inner"
-    ).drop(dict_c["surface"])
-    out = out.withColumn("score", link_score(F.col(surface_col), F.col("canonical")))
-    return out.where(F.col("score") >= min_score)
-
-
-def salted_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    key: str,
-    salt: int = 8,
-) -> DataFrame:
-    """Explicit skew-salted equi-join (SURVEY.md O39) for when the dimension
-    is too big to broadcast: fact keys get a deterministic salt from a
-    sibling column hash, dim rows are replicated across all salts.
-
-    Used as the fallback strategy; AQE's skew-join handles moderate skew, a
-    single mega-key on a non-broadcastable join needs this.
-    """
-    f = fact.withColumn("__salt", F.pmod(F.xxhash64(*fact.columns), F.lit(salt)).cast("int"))
-    d = dim.withColumn("__salt", F.explode(F.array([F.lit(i) for i in range(salt)])))
-    out = f.join(d, on=[key, "__salt"], how="inner").drop("__salt")
-    return out
 
 
 def candidate_edges(linked: DataFrame) -> DataFrame:

@@ -3,22 +3,14 @@
 The reference connects to any DBI-supported RDBMS and introspects it
 (``RDF::RDB2RDF::DirectMapping->process($dbh)``). Here a "database" is a
 dict of table-name -> DataFrame plus a constraints manifest; this module
-builds that dict from the places a Spark deployment actually reads:
-
-- a directory of parquet files (one per table) — the sandbox/test path
-- an Iceberg/HMS catalog namespace — the production path
-- a JDBC connection — the closest 1:1 analog of the reference's DBI usage
-  (Spark pushes projections/filters down to the RDBMS exactly like the
-  reference delegates SQL to it)
-
-All return the same ``dict[str, DataFrame]`` the mapping engine consumes, so
-a user of the reference pointing at Postgres can switch with one call.
+builds that dict from a directory of parquet files (one per table). Any
+other Spark source (a catalog namespace, JDBC) yields the same
+``dict[str, DataFrame]`` through ``spark.table`` / ``spark.read``.
 """
 
 from __future__ import annotations
 
 import os
-from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -33,48 +25,6 @@ def from_parquet_dir(
             continue
         table = name[: -len(".parquet")]
         df = spark.read.parquet(os.path.join(path, name))
-        if register_views:
-            df.createOrReplaceTempView(table)
-        out[table] = df
-    return out
-
-
-def from_catalog(
-    spark: SparkSession, namespace: str, register_views: bool = False
-) -> dict[str, DataFrame]:
-    """All tables of a catalog namespace (Iceberg/HMS production path)."""
-    out: dict[str, DataFrame] = {}
-    for t in spark.catalog.listTables(namespace):
-        df = spark.table(f"{namespace}.{t.name}")
-        if register_views:
-            df.createOrReplaceTempView(t.name)
-        out[t.name] = df
-    return out
-
-
-def from_jdbc(
-    spark: SparkSession,
-    url: str,
-    tables: list[str],
-    properties: dict[str, str] | None = None,
-    partition_options: dict[str, dict[str, Any]] | None = None,
-    register_views: bool = True,
-) -> dict[str, DataFrame]:
-    """JDBC tables — the 1:1 analog of the reference's DBI handle.
-
-    ``partition_options[table]`` may carry ``partitionColumn`` /
-    ``lowerBound`` / ``upperBound`` / ``numPartitions`` so large tables read
-    in parallel instead of through one connection (the scalability ceiling
-    the single-connection reference has by construction).
-    """
-    out: dict[str, DataFrame] = {}
-    for table in tables:
-        reader = spark.read.format("jdbc").option("url", url).option("dbtable", table)
-        for k, v in (properties or {}).items():
-            reader = reader.option(k, v)
-        for k, v in (partition_options or {}).get(table, {}).items():
-            reader = reader.option(k, v)
-        df = reader.load()
         if register_views:
             df.createOrReplaceTempView(table)
         out[table] = df

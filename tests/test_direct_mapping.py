@@ -237,3 +237,24 @@ def test_direct_map_verify_keys_audit(spark):
     manifest2 = {"t": {"pk": ["id"], "pk_enforced": False, "fks": []}}
     out = direct_map(spark, {"t": dup}, manifest2, verify_keys=True)
     assert out.count() == out.distinct().count()
+
+
+def test_dm_base_with_backslash_independent_of_escaped_string_literals(spark):
+    """A base IRI holding a backslash (and a quote) maps to the same triples
+    whichever way ``spark.sql.parser.escapedStringLiterals`` reads string
+    literals; the compact-dedup path builds its predicate table as SQL."""
+    base = "http://example.com/a\\b'c/"
+    df = spark.createDataFrame([(1, "x"), (1, "x"), (2, None)], "id int, v string")
+    manifest = {"t": {"pk": ["id"], "pk_enforced": False, "fks": []}}
+    key = "spark.sql.parser.escapedStringLiterals"
+    prev = spark.conf.get(key)
+    got = {}
+    try:
+        for mode in ("false", "true"):
+            spark.conf.set(key, mode)
+            got[mode] = set(map(tuple, direct_map(spark, {"t": df}, manifest, base=base).collect()))
+    finally:
+        spark.conf.set(key, prev)
+    assert got["true"] == got["false"]
+    preds = {r[2] for r in got["false"]}
+    assert preds == {RDF_TYPE, base + "t#id", base + "t#v"}

@@ -26,6 +26,25 @@ from p5_rdf_rdb2rdf_spark.pipeline.spans import (
 N_DOCS = 200
 
 
+def _shuffle_exchanges(df) -> int:
+    """ShuffleExchangeExec nodes in ``df``'s final executed plan (call after
+    an action). Walks the JVM plan tree: an AdaptiveSparkPlanExec contributes
+    its final plan, a query stage the exchange it wraps; a reused exchange
+    is not counted again."""
+
+    def walk(node) -> int:
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            return walk(node.executedPlan())
+        if name.endswith("QueryStageExec"):
+            kids = [node.plan()]
+        else:
+            kids = [node.children().apply(i) for i in range(node.children().size())]
+        return (name == "ShuffleExchangeExec") + sum(walk(k) for k in kids)
+
+    return walk(df._jdf.queryExecution().executedPlan())
+
+
 def test_synth_corpus_matches_python_oracle(spark):
     got = {r.doc_id: r.spans for r in synth_corpus(spark, N_DOCS, partitions=4).collect()}
     want = expected_docs(N_DOCS)
@@ -108,6 +127,23 @@ def test_pipeline_resume_identical(spark, tmp_path):
     assert t1 == t2
 
 
+def test_pipeline_and_compile_leave_no_persisted_frames(spark, tables, tmp_path):
+    """No frame a call persists outlives it: a pipeline run and a compiled
+    mapping's action leave Spark's persistent-RDD set as they found it."""
+    from pathlib import Path
+
+    from p5_rdf_rdb2rdf_spark.compiler import compile_mapping
+    from p5_rdf_rdb2rdf_spark.r2rml import r2rml_to_ir
+
+    ttl = (Path(__file__).resolve().parents[1] / "fixtures/mappings/emp.r2rml.ttl").read_text()
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = persisted().size()
+    docs = synth_corpus(spark, 50, partitions=2)
+    assert run_pipeline(spark, docs, str(tmp_path / "wd"), n_buckets=2).triples.count() > 0
+    assert compile_mapping(spark, r2rml_to_ir(ttl), tables=tables).count() > 0
+    assert persisted().size() == before
+
+
 def test_cc_merges_aliases(spark):
     """alias surfaces and canonical surfaces land on the same entity."""
     from p5_rdf_rdb2rdf_spark.pipeline.cc import canonical_mapping, connected_components
@@ -148,6 +184,24 @@ def test_cc_driver_and_distributed_paths_identical(spark):
     fast = sorted(map(tuple, connected_components(df).collect()))
     dist = sorted(map(tuple, connected_components(df, driver_threshold=0).collect()))
     assert fast == dist and fast
+
+    # s4's driver-side canonicalization (one union-find shared with the
+    # fast path above) equals canonical_mapping over the distributed CC;
+    # a component with no entity node drops out of both
+    from p5_rdf_rdb2rdf_spark.pipeline.cc import canonical_mapping
+    from p5_rdf_rdb2rdf_spark.pipeline.kgpipeline import canonical_surfaces
+
+    links = [
+        ("s:alias", "e:E2"), ("s:canon", "e:E2"), ("s:canon", "e:E1"),
+        ("s:solo", "e:E9"), ("s:orphan_a", "s:orphan_b"),
+    ]
+    ldf = spark.createDataFrame(links, "src string, dst string")
+    mapping = canonical_mapping(connected_components(ldf, driver_threshold=0))
+    want = sorted(
+        (r.node[2:], r.canonical_entity) for r in mapping.collect() if r.node.startswith("s:")
+    )
+    assert canonical_surfaces(links) == want
+    assert want == [("alias", "E1"), ("canon", "E1"), ("solo", "E9")]
 
 
 def test_cc_fast_path_preserves_node_type(spark):
@@ -513,9 +567,5 @@ def test_build_triples_matches_two_branch_reference_and_plan(spark):
     # object relation is dropped whole by the inner join, prov included)
     assert len(g) == 4
 
-    # AQE's executed-plan string repeats the tree under "== Initial Plan =="
-    # once finalized — count the dedup exchange in the final section only
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    plan = plan.split("== Initial Plan ==")[0]
-    import re
-    assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1
+    # one dedup exchange in the final plan AQE ran
+    assert _shuffle_exchanges(got) == 1

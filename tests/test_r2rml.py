@@ -102,31 +102,26 @@ def test_r2rml_graph_maps(spark, tables):
     assert by_pred["http://www.w3.org/1999/02/22-rdf-syntax-ns#type"] >= {g}
 
 
-def test_compile_mapping_memo_correct_and_staleness_guarded(spark):
-    """r8 compiled-mapping memo: an identical (mapping, sources, flags)
-    request reuses the built plan OBJECT; a different DataFrame bound to
-    the same table name must MISS (exact sameSemantics check, never a
-    hash) and recompile against the new source. Results are always
-    computed from the current inputs."""
+def test_compile_mapping_tracks_current_source_and_flags(spark):
+    """Every call compiles against the sources it is given: a different
+    DataFrame bound to the same table name compiles to that frame's data,
+    and ``dedup`` changes the plan (set semantics vs. bag)."""
     ttl = """
     @prefix rr: <http://www.w3.org/ns/r2rml#> .
-    <#T> rr:logicalTable [ rr:tableName "memo_t" ] ;
+    <#T> rr:logicalTable [ rr:tableName "src_t" ] ;
       rr:subjectMap [ rr:template "http://x/{k}" ] ;
       rr:predicateObjectMap [ rr:predicate <http://p/v> ;
         rr:objectMap [ rr:column "v" ] ] .
     """
     ir = r2rml_to_ir(ttl)
     df1 = spark.createDataFrame([(1, "a")], "k int, v string")
-    out1 = compile_mapping(spark, ir, tables={"memo_t": df1}, dedup=False)
-    out1b = compile_mapping(spark, ir, tables={"memo_t": df1}, dedup=False)
-    assert out1b is out1  # memo hit: same plan object
-    assert [tuple(r) for r in out1b.collect()] == [tuple(r) for r in out1.collect()]
+    out1 = compile_mapping(spark, ir, tables={"src_t": df1}, dedup=False)
+    assert {r.o_value for r in out1.collect()} == {"a"}
 
-    df2 = spark.createDataFrame([(2, "b")], "k int, v string")
-    out2 = compile_mapping(spark, ir, tables={"memo_t": df2}, dedup=False)
-    assert out2 is not out1  # different source plan: recompiled
-    vals = {r.o_value for r in out2.collect()}
-    assert vals == {"b"}
-    # flags are part of the key
-    out3 = compile_mapping(spark, ir, tables={"memo_t": df2}, dedup=True)
-    assert out3 is not out2
+    df2 = spark.createDataFrame([(2, "b"), (2, "b")], "k int, v string")
+    out2 = compile_mapping(spark, ir, tables={"src_t": df2}, dedup=False)
+    assert [(r.s_value, r.o_value) for r in out2.collect()] == [("http://x/2", "b")] * 2
+    # same mapping and source, dedup=True: a different plan, one triple
+    out3 = compile_mapping(spark, ir, tables={"src_t": df2}, dedup=True)
+    assert not out3.sameSemantics(out2)
+    assert [(r.s_value, r.o_value) for r in out3.collect()] == [("http://x/2", "b")]
