@@ -62,11 +62,11 @@ class StageCheckpointer:
         fn: Callable[[], DataFrame],
         inputs: list[str] | None = None,
         meta: dict | None = None,
-        force: bool = False,
     ) -> DataFrame:
         """Run (or resume) one stage. ``fn`` builds the stage's DataFrame;
-        it only executes when the checkpoint is missing/incomplete."""
-        if self.is_complete(stage) and not force:
+        it only executes when the checkpoint is missing/incomplete
+        (``reset_from`` forces a re-run)."""
+        if self.is_complete(stage):
             return self.read(stage)
         t0 = time.time()
         out_dir = self.stage_dir(stage)

@@ -90,12 +90,6 @@ def parquet_file_rows(spark: SparkSession, directory: str) -> list[tuple[str, in
     return out
 
 
-def partition_value(file_path: str, column: str) -> str | None:
-    """Hive-style partition value (``.../column=value/...``) of a file path."""
-    m = re.search(rf"(?:^|/){re.escape(column)}=([^/]*)/", file_path)
-    return m.group(1) if m else None
-
-
 def task_partition_id(file_path: str) -> int | None:
     """Spark task partition id parsed from the part-file name."""
     m = _PART_RE.search(os.path.basename(file_path))

@@ -11,8 +11,14 @@ Backends:
   ``writeTo(...).partitionedBy(bucket(...))`` — snapshots/lineage come from
   Iceberg itself. This is the 100 TB production path.
 - **parquet** (sandbox fallback): partitioned directories plus a versioned
-  **snapshot manifest** (JSON: snapshot id -> file list, per-partition row
-  counts, parent snapshot) supplying the same checkpoint/resume semantics.
+  **snapshot manifest** (JSON: snapshot id -> data directories, total row
+  count, parent snapshot) supplying the same checkpoint/resume semantics.
+
+A predicate's bucket is never stored: every path that needs it (the write's
+partition column, ``read_predicate``'s filter, merge's anti-join pruning)
+evaluates the same ``pmod(xxhash64(p), n_buckets)`` expression in the JVM.
+On a literal predicate Catalyst folds it to a constant, so a bound-predicate
+read reaches the scan as a plain ``pred_bucket = <int>`` partition filter.
 
 At 10^12-document scale the bucket count is the partition-sizing knob: with
 K buckets and T triples, each bucket holds T/K triples; choose K so a bucket
@@ -27,11 +33,11 @@ import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..terms import TRIPLE_COLUMNS
-from .footers import parquet_file_rows, partition_value
+from .footers import parquet_file_rows
 
 MANIFEST = "_snapshots.json"
 
@@ -44,15 +50,6 @@ MANIFEST = "_snapshots.json"
 # (ADVICE r3 #3). At that vocabulary width most buckets are touched anyway,
 # so pruning would have bought little.
 MAX_PRUNE_PREDICATES = 256
-
-# write() keeps the manifest's predicate->bucket map only up to this many
-# distinct predicates; beyond it (generic wide property graphs) the map is
-# dropped and bound-predicate reads fall back to the memoized bucket job —
-# a manifest must stay a small driver-side JSON document, not scale with the
-# vocabulary. (At that width the Iceberg backend, whose partition metadata
-# is file-backed, is the right home for the mapping anyway.) The map is only
-# COLLECTED at all for tables declared ``closed_vocabulary`` — see write().
-MAX_MANIFEST_PREDICATES = 100_000
 
 
 def _has_iceberg(spark: SparkSession, catalog: str | None) -> bool:
@@ -74,35 +71,23 @@ class GraphTable:
         n_buckets: int = 32,
         iceberg_catalog: str | None = None,
         iceberg_table: str | None = None,
-        max_chain_len: int | None = 16,
-        closed_vocabulary: bool = False,
+        max_chain_len: int = 16,
     ):
-        """``max_chain_len`` bounds the delta chain ``merge`` builds: when a
+        """``n_buckets`` is the partition count K of a new table; reopening
+        an existing table adopts the K it was written with.
+
+        ``max_chain_len`` bounds the delta chain ``merge`` builds: when a
         merge would leave more than this many directories in the current
         snapshot, the chain is auto-compacted into one (VERDICT r3 #6) —
         reads stay O(1) scan branches and the anti-join's parent side stays
         one union arm, at the cost of one chain rewrite every K merges
-        (amortized O(|graph|/K) per merge). ``None`` disables auto-compaction
-        (callers that schedule their own).
-
-        ``closed_vocabulary=True`` declares that the graph's distinct
-        predicate set is small and bounded (the KG pipeline's case: a fixed
-        template vocabulary). Only then does write() collect the
-        predicate->bucket manifest map — the collection itself materializes
-        every distinct predicate in task aggregate buffers and on the
-        driver, which is unbounded for generic RDF (VERDICT r4 What's-wrong
-        #1: the MAX_MANIFEST_PREDICATES cap used to apply only AFTER that
-        transfer). Generic tables skip the map entirely; bound-predicate
-        reads use the memoized 1-row bucket job and merge pruning computes
-        buckets by pure ``pmod(xxhash64(p), K)`` — no data needed."""
+        (amortized O(|graph|/K) per merge)."""
         self.spark = spark
         self.path = path
         self.n_buckets = n_buckets
         self.max_chain_len = max_chain_len
-        self.closed_vocabulary = closed_vocabulary
         self.iceberg = _has_iceberg(spark, iceberg_catalog)
         self.iceberg_ref = f"{iceberg_catalog}.{iceberg_table}" if self.iceberg else None
-        self._bucket_cache: dict[str, int] = {}  # predicate -> bucket memo
         # A table's bucket count is fixed at creation (like Hive bucketing):
         # every bucket-pruning path recomputes pmod(xxhash64(p), K) and MUST
         # use the K the data was written with — a process reopening the table
@@ -113,11 +98,15 @@ class GraphTable:
         if cur is not None and cur.get("n_buckets") not in (None, n_buckets):
             self.n_buckets = cur["n_buckets"]
 
+    def _bucket(self, predicate: Column) -> Column:
+        """The predicate's partition bucket, ``pmod(xxhash64(p), K)`` — the
+        one definition every write, read and merge path evaluates."""
+        return F.pmod(F.xxhash64(predicate), F.lit(self.n_buckets)).cast("int")
+
     # -- write ---------------------------------------------------------------
     def write(
         self,
         triples: DataFrame,
-        mode: str = "overwrite",
         lineage: dict | None = None,
         dedup: bool = False,
         distribute: bool = True,
@@ -154,22 +143,16 @@ class GraphTable:
 
             if dedup:
                 triples = triples.dropDuplicates(list(TRIPLE_COLUMNS))
-            writer = triples.writeTo(self.iceberg_ref).using("iceberg")
-            if mode == "overwrite":
-                writer.partitionedBy(
-                    partitioning.bucket(self.n_buckets, F.col("p_value"))
-                ).createOrReplace()
-            else:
-                writer.append()
+            triples.writeTo(self.iceberg_ref).using("iceberg").partitionedBy(
+                partitioning.bucket(self.n_buckets, F.col("p_value"))
+            ).createOrReplace()
             return str(self.spark.sql(
                 f"SELECT snapshot_id FROM {self.iceberg_ref}.snapshots ORDER BY committed_at DESC LIMIT 1"
             ).head()[0])
 
         if dedup:
             triples = triples.dropDuplicates(list(TRIPLE_COLUMNS))
-        df = triples.withColumn(
-            "pred_bucket", F.pmod(F.xxhash64(F.col("p_value")), F.lit(self.n_buckets)).cast("int")
-        )
+        df = triples.withColumn("pred_bucket", self._bucket(F.col("p_value")))
         snapshot_id = uuid.uuid4().hex[:16]
         data_dir = os.path.join(self.path, f"snap-{snapshot_id}")
         # Shuffle on (pred_bucket, s_value), NOT pred_bucket alone: real
@@ -191,55 +174,17 @@ class GraphTable:
                 self.n_buckets, df.sparkSession.sparkContext.defaultParallelism * 2
             )
             df = df.repartition(n_tasks, F.col("pred_bucket"), F.col("s_value"))
-        # The |predicates|-sized predicate->bucket map (read_predicate's
-        # one-job pruning + merge's all-new-predicate skip) rides the WRITE'S
-        # OWN pass as a collect_set Observation — but ONLY for tables the
-        # caller declared closed_vocabulary: the metric accumulates every
-        # distinct (bucket, predicate) pair in task aggregate buffers and
-        # transfers them to the driver BEFORE any cap can apply, which for
-        # generic wide-vocabulary RDF is exactly the unbounded driver
-        # materialization MAX_MANIFEST_PREDICATES exists to prevent (VERDICT
-        # r4 What's-wrong #1). Generic tables collect nothing: a predicate's
-        # bucket is pure pmod(xxhash64(p), K), so merge pruning recomputes it
-        # from the batch's already-capped predicate list and read_predicate
-        # memoizes a 1-row fallback job.
-        obs = None
-        if self.closed_vocabulary:
-            obs = Observation(f"gt-write-{snapshot_id}")
-            df = df.observe(
-                obs,
-                F.collect_set(F.struct("pred_bucket", "p_value")).alias("__pred_pairs"),
-            )
         (
             df.write.mode("overwrite")
             .option("maxRecordsPerFile", 5_000_000)
             .partitionBy("pred_bucket")
             .parquet(data_dir)
         )
-        # Total and per-bucket row counts come from the parquet FOOTERS of
-        # the files the commit kept — O(files) driver-side metadata reads
-        # (local fast path / Hadoop FS API for remote URIs), ZERO data scans,
+        # The row count comes from the parquet FOOTERS of the files the
+        # commit kept — O(files) driver-side metadata reads, zero data scans,
         # and exact even under stage re-execution or speculative tasks, where
-        # accumulator-backed Observation metrics over-count (ADVICE r4).
-        # Also removes the former n_buckets count_if aggregate expressions
-        # from the write pass itself (VERDICT r4 next-round #3).
-        counts: dict[str, int] = {}
-        total = 0
-        for fpath, rows in parquet_file_rows(self.spark, data_dir):
-            total += rows
-            b = partition_value(fpath, "pred_bucket")
-            if b is not None:
-                counts[b] = counts.get(b, 0) + rows
-        pred_buckets: dict[str, int] = {}
-        map_complete = False
-        if obs is not None:
-            pairs = obs.get["__pred_pairs"]
-            # cap still enforced even for a closed_vocabulary declaration
-            # that turns out to be wrong — the manifest must stay a small
-            # driver-side JSON document
-            if len(pairs) <= MAX_MANIFEST_PREDICATES:
-                pred_buckets = {r["p_value"]: r["pred_bucket"] for r in pairs}
-                map_complete = True
+        # accumulator-backed write metrics over-count (ADVICE r4).
+        total = sum(rows for _path, rows in parquet_file_rows(self.spark, data_dir))
         manifest = self._read_manifest()
         manifest["snapshots"].append(
             {
@@ -248,14 +193,6 @@ class GraphTable:
                 "created_at": time.time(),
                 "parent": manifest.get("current"),
                 "n_buckets": self.n_buckets,
-                "partition_rows": counts,
-                "pred_buckets": pred_buckets,
-                # True iff pred_buckets covers EVERY predicate in this
-                # snapshot — merge's "batch predicate unknown to the map =>
-                # cannot overlap" inference is only sound then (an
-                # incomplete map silently skipping the anti-join was a
-                # duplicate-appending bug window in the capped path)
-                "pred_map_complete": map_complete,
                 "total_rows": total,
                 "chain_len": 1,
                 "lineage": lineage or {},
@@ -266,13 +203,7 @@ class GraphTable:
         return snapshot_id
 
     # -- incremental merge -----------------------------------------------------
-    def merge(
-        self,
-        new_triples: DataFrame,
-        lineage: dict | None = None,
-        dedup: bool = True,
-        distribute: bool = True,
-    ) -> str:
+    def merge(self, new_triples: DataFrame, lineage: dict | None = None) -> str:
         """Incremental set-semantics materialization: the new snapshot equals
         ``current ∪ new_triples`` (distinct), but only the DELTA — new rows
         not already in the graph — is written; the snapshot's manifest entry
@@ -280,19 +211,11 @@ class GraphTable:
         O(|new| + one anti-join), not O(|graph|). Re-merging already-known
         triples is a no-op delta (idempotent resume, matching the
         StageCheckpointer contract). ``read``/``read_predicate`` transparently
-        union the chain; ``pred_buckets`` maps accumulate along it. When the
-        chain would exceed ``max_chain_len`` directories the merge
-        auto-compacts it into one (see ``__init__``) and returns the
-        compacted snapshot.
-
-        ``dedup``/``distribute`` are the first-write hints (ADVICE r3 #5): a
-        caller whose batch is already distinct and well-partitioned passes
-        ``dedup=False`` / ``distribute=False`` so the EMPTY-PARENT fast path
-        skips the full-key distinct shuffle / the write repartition exactly
-        as ``write`` would. On the incremental path ``dedup=False`` skips the
-        batch-side pre-distinct before the anti-join (the anti-join output
-        feeds a fused-dedup write either way, so snapshot set semantics
-        hold regardless).
+        union the chain. When the chain would exceed ``max_chain_len``
+        directories the merge auto-compacts it into one (see ``__init__``)
+        and returns the compacted snapshot. The batch may hold duplicates:
+        a merge into an empty table is a fused-dedup ``write``, and the
+        incremental path de-duplicates the batch before the anti-join.
 
         The anti-join hashes on the full triple key — one shuffle of
         delta + parent, no skew. On the Iceberg backend the delta is
@@ -300,14 +223,12 @@ class GraphTable:
         keeps the manifest chain.
         """
         if self.iceberg:
-            return self._merge_iceberg(new_triples, dedup=dedup)
+            return self._merge_iceberg(new_triples)
         cur = self.current_snapshot()
         if cur is None:
-            return self.write(
-                new_triples, dedup=dedup, distribute=distribute, lineage=lineage
-            )
+            return self.write(new_triples, lineage=lineage, dedup=True)
         parent_dirs = cur.get("dirs", [cur["dir"]])
-        delta = self._delta_against(cur, new_triples, pre_distinct=dedup)
+        delta = self._delta_against(cur, new_triples)
         # dedup=True is a semantic no-op here (the anti-join output is already
         # distinct) but reuses the join's full-key partitioning: the fused
         # distinct adds no exchange, whereas the non-dedup path would
@@ -319,27 +240,12 @@ class GraphTable:
         snap["chain_len"] = len(snap["dirs"])
         snap["delta_rows"] = snap["total_rows"]
         snap["total_rows"] = cur["total_rows"] + snap["total_rows"]
-        # fold the parent chain's per-bucket counts into this link (exact:
-        # the delta is disjoint from the parent by anti-join), so
-        # ``partition_rows`` always describes the WHOLE chain — BGP join
-        # ordering reads the newest link only, and delta-only counts after
-        # many merges would anchor joins on stale estimates (VERDICT r6 #4).
-        # Invariant preserved: sum(partition_rows) == total_rows.
-        chained = dict(cur.get("partition_rows", {}))
-        for b, r in snap["partition_rows"].items():
-            chained[b] = chained.get(b, 0) + r
-        snap["partition_rows"] = chained
-        snap["pred_buckets"] = {**cur.get("pred_buckets", {}), **snap["pred_buckets"]}
-        # the chained map is complete only if every link's was
-        snap["pred_map_complete"] = (
-            cur.get("pred_map_complete", False) and snap["pred_map_complete"]
-        )
         self._write_manifest(m)
-        if self.max_chain_len is not None and snap["chain_len"] > self.max_chain_len:
+        if snap["chain_len"] > self.max_chain_len:
             return self.compact(sid, lineage={"auto_compacted": True})
         return sid
 
-    def _merge_iceberg(self, new_triples: DataFrame, dedup: bool) -> str:
+    def _merge_iceberg(self, new_triples: DataFrame) -> str:
         """Iceberg incremental merge via ``MERGE INTO ... WHEN NOT MATCHED
         THEN INSERT *`` — ATOMIC against concurrent writers (VERDICT r4
         next-round #8: the previous anti-join+append was correct
@@ -353,20 +259,19 @@ class GraphTable:
         source's predicates. Never createOrReplace on an existing table
         (ADVICE r3 #1: that destroyed every earlier merge). Idempotent:
         re-merging known triples matches everything and inserts nothing.
-        ``dedup=False`` callers vouch the batch is internally distinct —
-        MERGE inserts EVERY not-matched source row, so intra-batch
-        duplicates would land twice (same contract as the parquet path)."""
+        The batch is de-duplicated first: MERGE inserts EVERY not-matched
+        source row, so intra-batch duplicates would otherwise land twice."""
         import uuid as _uuid
 
-        new = new_triples.dropDuplicates(list(TRIPLE_COLUMNS)) if dedup else new_triples
+        new = new_triples.dropDuplicates(list(TRIPLE_COLUMNS))
         try:
             exists = self.spark.catalog.tableExists(self.iceberg_ref)
         except Exception:
             exists = False
         if not exists:
             # write() creates the table with its bucket(p_value) partition
-            # spec; the batch is already distinct when dedup was requested
-            return self.write(new, mode="overwrite", dedup=False)
+            # spec; the batch is already distinct
+            return self.write(new)
         view = f"__gt_merge_src_{_uuid.uuid4().hex[:8]}"
         new.createOrReplaceTempView(view)
         try:
@@ -382,28 +287,16 @@ class GraphTable:
             "ORDER BY committed_at DESC LIMIT 1"
         ).head()[0])
 
-    def _delta_against(
-        self, cur: dict, new_triples: DataFrame, pre_distinct: bool = True
-    ) -> DataFrame:
-        """Rows of ``new_triples`` not present in the ``cur`` snapshot chain.
+    def _delta_against(self, cur: dict, new_triples: DataFrame) -> DataFrame:
+        """Distinct rows of ``new_triples`` not present in the ``cur``
+        snapshot chain.
 
         The parent side of the anti-join is PRUNED to the predicate buckets
         the incoming batch actually touches. The buckets are computed IN the
-        capped distinct-predicate job itself via ``pmod(xxhash64(p), K)`` —
-        pure hash, JVM parity with write-time bucket assignment by
-        construction, no manifest state needed — so pruning works for
-        generic tables whose manifests carry no predicate map (VERDICT r4
-        next-round #2). A delta touching few predicates scans only those
-        partition directories; merge cost tracks the touched partitions,
-        not the graph.
-
-        When the manifest map is COMPLETE (closed_vocabulary tables), a
-        batch whose predicates are all unknown to the map skips the join
-        entirely — no parent row can overlap. An INCOMPLETE map (generic
-        tables, or a capped closed-vocab write) must never drive that skip:
-        inferring "unknown to the map => not in the graph" from a partial
-        map silently skipped the anti-join and appended duplicates (the
-        pre-r5 capped-path bug, regression-tested in test_io.py).
+        capped distinct-predicate job itself with ``_bucket`` — the same
+        JVM expression the write assigned them with. A delta touching few
+        predicates scans only those partition directories; merge cost tracks
+        the touched partitions, not the graph. An empty batch skips the join.
 
         The predicate collect is CAPPED at ``MAX_PRUNE_PREDICATES`` (ADVICE
         r3 #3): a batch with a wider vocabulary — generic RDF property
@@ -415,34 +308,19 @@ class GraphTable:
         every NULL-bearing triple on each merge (caught by the idempotence
         test). eqNullSafe keeps the anti-join an ordinary hash join.
         """
-        new = new_triples.dropDuplicates(list(TRIPLE_COLUMNS)) if pre_distinct else new_triples
-        new = new.alias("new")
-        pred_map = cur.get("pred_buckets", {})
-        map_complete = cur.get("pred_map_complete", False)
-        parent_dirs = cur.get("dirs", [cur["dir"]])
+        new = new_triples.dropDuplicates(list(TRIPLE_COLUMNS)).alias("new")
         pred_rows = (
             new.select("p_value")
             .distinct()
             .limit(MAX_PRUNE_PREDICATES + 1)
-            .select(
-                "p_value",
-                F.pmod(F.xxhash64("p_value"), F.lit(self.n_buckets))
-                .cast("int")
-                .alias("bucket"),
-            )
+            .select(self._bucket(F.col("p_value")).alias("bucket"))
             .collect()
         )
-        base = self._read_dirs(parent_dirs)
+        if not pred_rows:
+            return new  # empty batch
+        base = self._read_dirs(cur.get("dirs", [cur["dir"]]))
         if len(pred_rows) <= MAX_PRUNE_PREDICATES:
-            if map_complete:
-                known = [r for r in pred_rows if r.p_value in pred_map]
-                if not known:
-                    return new  # nothing the graph already knows can overlap
-                buckets = sorted({r.bucket for r in known})
-            else:
-                if not pred_rows:
-                    return new  # empty batch
-                buckets = sorted({r.bucket for r in pred_rows})
+            buckets = sorted({r.bucket for r in pred_rows})
             base = base.where(F.col("pred_bucket").isin(buckets))  # prunes directories
         base = base.drop("pred_bucket").alias("base")
         cond = None
@@ -460,8 +338,7 @@ class GraphTable:
         counterpart: one fused-dedup write of the chain (the chain is
         distinct by construction, so the dedup is a partitioning no-op that
         still yields the single-exchange write path), producing a snapshot
-        whose manifest has ONE directory and a freshly-computed
-        predicate->bucket map. Earlier snapshots — including the compacted
+        whose manifest has ONE directory. Earlier snapshots — including the compacted
         chain's links — remain readable (time travel unaffected). Run it
         every K merges or when the chain length crosses a read-latency
         budget (``max_chain_len`` does this automatically); on Iceberg the
@@ -510,13 +387,11 @@ class GraphTable:
     def read_predicate(self, predicate: str, snapshot_id: str | None = None) -> DataFrame:
         """Bound-predicate read — prunes to one bucket before filtering.
 
-        The predicate's bucket comes from the snapshot manifest's write-time
-        ``pred_buckets`` map (falling back to a memoized 1-row Spark job only
-        for predicates unknown to the manifest — the map must match the JVM's
-        xxhash64 exactly, so it is never recomputed in Python). A predicate
-        absent from the manifest map AND the fallback still filters correctly;
-        the manifest hit means a bound-predicate query schedules exactly ONE
-        Spark job (the pruned scan itself)."""
+        The bucket filter is ``_bucket`` over the literal predicate, which
+        Catalyst folds to a constant: the scan's partition filter is
+        ``pred_bucket = <int>``, so only that bucket's directories are
+        listed, in every link of a merge chain, and no job runs to compute
+        the bucket. The bucket is the JVM's xxhash64, never a Python copy."""
         if self.iceberg:
             # Iceberg prunes via hidden bucket(p_value) partitioning: the
             # equality filter alone reaches its partition metadata
@@ -525,28 +400,12 @@ class GraphTable:
             )
         snap = self._snapshot(snapshot_id)
         df = self._read_dirs(snap.get("dirs", [snap["dir"]]))
-        bucket = snap.get("pred_buckets", {}).get(predicate)
-        if bucket is None:
-            bucket = self._bucket_via_job(predicate)
         # pred_bucket is a partition column: this comparison prunes directories
         return (
-            df.where(F.col("pred_bucket") == bucket)
+            df.where(F.col("pred_bucket") == self._bucket(F.lit(predicate)))
             .where(F.col("p_value") == predicate)
             .drop("pred_bucket")
         )
-
-    def _bucket_via_job(self, predicate: str) -> int:
-        """JVM xxhash64 bucket for a predicate not present at write time;
-        memoized per GraphTable instance so repeated unknown-predicate
-        queries cost one scheduling round-trip total, not one each."""
-        if predicate not in self._bucket_cache:
-            row = self.spark.range(1).select(
-                F.pmod(F.xxhash64(F.lit(predicate)), F.lit(self.n_buckets))
-                .cast("int")
-                .alias("b")
-            ).head()
-            self._bucket_cache[predicate] = row.b
-        return self._bucket_cache[predicate]
 
     # -- snapshots -------------------------------------------------------------
     def snapshots(self) -> list[dict]:

@@ -17,7 +17,6 @@ from dataclasses import dataclass, field, asdict
 from typing import Any
 
 TERM_IRI = "iri"
-TERM_BLANK = "blank"
 TERM_LITERAL = "literal"
 
 

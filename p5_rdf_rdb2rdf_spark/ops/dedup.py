@@ -144,7 +144,6 @@ def minhash_lsh_pairs(
     threshold: float = 0.7,
     num_hashes: int = 64,
     max_bucket_size: int | None = 10_000,
-    checkpoint_sigs: bool = True,
 ) -> DataFrame:
     """Banded LSH: docs sharing any band bucket become candidates; candidates
     are verified by estimated Jaccard (signature agreement) >= threshold.
@@ -166,16 +165,13 @@ def minhash_lsh_pairs(
     the est-Jaccard verify. Buckets larger than ``max_bucket_size`` are
     dropped before the self-join (see :func:`_cap_buckets`).
 
-    ``checkpoint_sigs`` (default on) lazily localCheckpoints the signature
-    frame: this plan consumes ``sigs`` THREE times (the banded explode and
-    the two per-side verify joins), and without the checkpoint each
-    consumer recomputes the O(tokens x H) signature fold from the raw
-    corpus — at 100 TB, three full corpus re-reads (measured 2x end-to-end
-    at sf0.1). A production run that already persisted signatures to
-    storage passes False.
+    The signature frame is lazily localCheckpointed: this plan consumes
+    ``sigs`` THREE times (the banded explode and the two per-side verify
+    joins), and without the checkpoint each consumer recomputes the
+    O(tokens x H) signature fold from the raw corpus — at 100 TB, three
+    full corpus re-reads (measured 2x end-to-end at sf0.1).
     """
-    if checkpoint_sigs:
-        sigs = sigs.localCheckpoint(eager=False)
+    sigs = sigs.localCheckpoint(eager=False)
     rows_per_band = num_hashes // bands or 1
     banded = sigs.select(
         F.col(id_col),
@@ -299,19 +295,17 @@ def simhash_blocked_pairs(
     id_col: str = "doc_id",
     max_hamming: int = 3,
     max_bucket_size: int | None = 10_000,
-    checkpoint_sh: bool = True,
 ) -> DataFrame:
     """Pigeonhole-blocked near-pairs over a precomputed (id, simhash) frame —
     the core of :func:`simhash_pairs`, exposed so the segment-extraction sign
     handling is unit-testable on literal simhash values.
 
-    ``checkpoint_sh`` lazily localCheckpoints the input: the blocked frame
-    is consumed three times (bucket-size cap + both sides of the
-    self-join), and when ``sh`` carries the 64-slot simhash fold each
-    consumer would otherwise recompute it from the corpus (same
-    multi-consumer recompute as :func:`minhash_lsh_pairs`)."""
-    if checkpoint_sh:
-        sh = sh.localCheckpoint(eager=False)
+    The input is lazily localCheckpointed: the blocked frame is consumed
+    three times (bucket-size cap + both sides of the self-join), and when
+    ``sh`` carries the 64-slot simhash fold each consumer would otherwise
+    recompute it from the corpus (same multi-consumer recompute as
+    :func:`minhash_lsh_pairs`)."""
+    sh = sh.localCheckpoint(eager=False)
     segs = max_hamming + 1
     seg_bits = 64 // segs
     seg_vals = F.array(

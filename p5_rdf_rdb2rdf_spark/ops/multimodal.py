@@ -42,15 +42,6 @@ try:  # pragma: no cover - absent in this container
 except ImportError:
     _soundfile = None
 
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_ref", T.StringType(), False),
-        T.StructField("kind", T.StringType(), False),
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField("n_bytes", T.IntegerType(), True),
-    ]
-)
-
 
 def fetch_media(spans: DataFrame) -> DataFrame:
     """media_ref -> (media_ref, kind, payload, n_bytes).
@@ -611,15 +602,6 @@ def decode_audio(media: DataFrame) -> DataFrame:
     return media.where(F.col("kind") == "audio").select("media_ref", "payload").mapInPandas(
         run, schema=AUDIO_META_SCHEMA
     )
-
-
-VIDEO_META_SCHEMA = T.StructType(
-    [
-        T.StructField("media_ref", T.StringType()),
-        T.StructField("container", T.StringType()),
-        T.StructField("n_frames_est", T.IntegerType()),
-    ]
-)
 
 
 def probe_video(media: DataFrame, bytes_per_frame_est: int = 512) -> DataFrame:

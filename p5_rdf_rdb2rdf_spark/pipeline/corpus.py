@@ -284,19 +284,3 @@ def spans_from_documents(documents: DataFrame) -> DataFrame:
         d.cast("string").alias("doc_id"), spans.alias("spans")
     )
 
-
-# DuckDB-SQL twin of spans_from_documents + posexplode, as a flat span list:
-# (doc_id, kind, text, media_ref, offset) — used by oracle_sql entries.
-SPANS_FLAT_SQL = """
-    SELECT CAST(doc_id AS VARCHAR) AS doc_id, 'text' AS kind, text,
-           CAST(NULL AS VARCHAR) AS media_ref, 0 AS offset
-    FROM documents
-    UNION ALL
-    SELECT CAST(doc_id AS VARCHAR), 'image', NULL,
-           'media://image/' || CAST(doc_id AS VARCHAR) || '/1', 1
-    FROM documents WHERE doc_id % 3 = 0
-    UNION ALL
-    SELECT CAST(doc_id AS VARCHAR), 'audio', NULL,
-           'media://audio/' || CAST(doc_id AS VARCHAR) || '/2', 2
-    FROM documents WHERE doc_id % 5 = 0
-"""

@@ -272,13 +272,7 @@ def run_pipeline(
 
     triples = ckpt.run_stage("s5_triples", _triples, inputs=["s2_relations", "s4_canon"])
 
-    # closed_vocabulary: the pipeline's predicate set is the fixed template
-    # vocabulary + the provenance predicate — the manifest's predicate->bucket
-    # map stays a handful of entries, and collecting it is safe (the generic
-    # default skips the collection entirely; VERDICT r4 What's-wrong #1)
-    table = GraphTable(
-        spark, f"{workdir}/graph", n_buckets=n_buckets, closed_vocabulary=True
-    )
+    table = GraphTable(spark, f"{workdir}/graph", n_buckets=n_buckets)
     # _triples output is distinct by construction (compact-key dedup above),
     # so the write keeps the dedup shuffle's partitioning and adds NO further
     # exchange (distribute=False); the whole materialization costs exactly

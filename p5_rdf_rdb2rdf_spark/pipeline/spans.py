@@ -13,9 +13,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-SPAN_FIELDS = ["kind", "text", "media_ref", "offset"]
-
-
 def explode_spans(docs: DataFrame) -> DataFrame:
     """(doc_id, spans[]) -> one row per span, preserving offset order info."""
     return docs.select(

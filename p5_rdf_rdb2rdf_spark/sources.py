@@ -15,17 +15,15 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 
-def from_parquet_dir(
-    spark: SparkSession, path: str, register_views: bool = True
-) -> dict[str, DataFrame]:
-    """Every ``<table>.parquet`` under ``path`` becomes a table."""
+def from_parquet_dir(spark: SparkSession, path: str) -> dict[str, DataFrame]:
+    """Every ``<table>.parquet`` under ``path`` becomes a table, also
+    registered as a temp view of that name."""
     out: dict[str, DataFrame] = {}
     for name in sorted(os.listdir(path)):
         if not name.endswith(".parquet"):
             continue
         table = name[: -len(".parquet")]
         df = spark.read.parquet(os.path.join(path, name))
-        if register_views:
-            df.createOrReplaceTempView(table)
+        df.createOrReplaceTempView(table)
         out[table] = df
     return out

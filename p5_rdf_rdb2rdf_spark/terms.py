@@ -32,14 +32,12 @@ from pyspark.sql import types as T
 XSD = "http://www.w3.org/2001/XMLSchema#"
 RDF_NS = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
 RDF_TYPE = RDF_NS + "type"
-RDF_LANGSTRING = RDF_NS + "langString"
 
 XSD_INTEGER = XSD + "integer"
 XSD_DECIMAL = XSD + "decimal"
 XSD_DOUBLE = XSD + "double"
 XSD_BOOLEAN = XSD + "boolean"
 XSD_DATE = XSD + "date"
-XSD_TIME = XSD + "time"
 XSD_DATETIME = XSD + "dateTime"
 XSD_HEXBINARY = XSD + "hexBinary"
 XSD_STRING = XSD + "string"

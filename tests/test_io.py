@@ -12,6 +12,20 @@ from p5_rdf_rdb2rdf_spark.io.graph_table import GraphTable
 BASE = "http://example.com/base/"
 
 
+def _job_count(spark, action) -> int:
+    """Spark jobs scheduled while ``action()`` runs."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_graph_table_roundtrip_and_snapshots(spark, tables, tmp_path):
     triples = direct_map(spark, tables, CONSTRAINTS, base=BASE)
     gt = GraphTable(spark, str(tmp_path / "gt"), n_buckets=4)
@@ -22,25 +36,49 @@ def test_graph_table_roundtrip_and_snapshots(spark, tables, tmp_path):
     assert got == want
 
     # second snapshot chains to the first and both stay readable
-    snap2 = gt.write(triples.where(F.col("p_value").contains("title")))
+    titles = triples.where(F.col("p_value").contains("title"))
+    snap2 = gt.write(titles)
     assert gt.current_snapshot()["id"] == snap2
     assert gt.current_snapshot()["parent"] == snap1
     assert gt.read(snap1).count() == len(want)
-    meta = gt.current_snapshot()
-    assert meta["total_rows"] == sum(meta["partition_rows"].values())
+    assert gt.current_snapshot()["total_rows"] == titles.count()
 
 
 def test_graph_table_predicate_pruning(spark, tables, tmp_path):
+    """A bound-predicate read is ONE pruned scan: the bucket expression
+    folds to a constant partition filter ``pred_bucket = <int>`` on every
+    scan, and ``read_predicate(p).count()`` schedules no more jobs than a
+    plain ``read().where(p_value = p).count()`` — no job computes the
+    bucket. Holds for a single directory and for a merge chain."""
+    import re
+
     triples = direct_map(spark, tables, CONSTRAINTS, base=BASE)
     gt = GraphTable(spark, str(tmp_path / "gt2"), n_buckets=4)
-    gt.write(triples)
+    gt.write(triples.where(~F.col("p_value").contains("books")))
     pred = f"{BASE}books#title"
-    df = gt.read_predicate(pred)
+    bucket = spark.range(1).select(
+        F.pmod(F.xxhash64(F.lit(pred)), F.lit(4)).cast("int").alias("b")
+    ).head().b
     want = triples.where(F.col("p_value") == pred).count()
-    assert df.count() == want
-    # partition filter must appear in the plan (directory pruning)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "pred_bucket" in plan
+
+    def check(n_scans: int, expect: int) -> None:
+        reopened = GraphTable(spark, gt.path)  # first query of a new instance
+        got = []
+        jobs = _job_count(spark, lambda: got.append(reopened.read_predicate(pred).count()))
+        assert got == [expect]
+        bare = reopened.read().where(F.col("p_value") == pred)
+        assert jobs <= _job_count(spark, bare.count)
+        plan = reopened.read_predicate(pred)._jdf.queryExecution().executedPlan().toString()
+        pfs = re.findall(r"PartitionFilters: \[([^\]]*)\]", plan)
+        assert len(pfs) == n_scans, plan
+        for pf in pfs:
+            assert re.search(rf"\(pred_bucket#\d+ = {bucket}\)", pf), plan
+
+    check(n_scans=1, expect=0)  # the predicate is not in the graph yet
+    gt.merge(triples)  # chain: two snapshot directories
+    assert gt.current_snapshot()["chain_len"] == 2
+    check(n_scans=2, expect=want)
+    assert gt.read_predicate("http://nowhere/p").count() == 0
 
 
 def test_graph_table_fused_dedup_single_exchange(spark, tables, tmp_path):
@@ -79,47 +117,13 @@ def test_graph_table_fused_dedup_single_exchange(spark, tables, tmp_path):
     assert "rangepartitioning" not in plan.lower(), plan  # sort stayed local
 
 
-def test_graph_table_manifest_bucket_map_no_extra_job(spark, tables, tmp_path, monkeypatch):
-    """VERDICT r2 next-round #7: the write-time manifest carries the
-    predicate->bucket map, so a bound-predicate read schedules ONLY the
-    pruned scan — the 1-row bucket job must not run for known predicates,
-    and runs at most once (memoized) for unknown ones. The map is collected
-    only for closed_vocabulary tables (r5)."""
-    triples = direct_map(spark, tables, CONSTRAINTS, base=BASE)
-    gt = GraphTable(spark, str(tmp_path / "gt3"), n_buckets=4, closed_vocabulary=True)
-    gt.write(triples)
-    snap = gt.current_snapshot()
-    preds = {r.p_value for r in triples.select("p_value").distinct().collect()}
-    assert set(snap["pred_buckets"]) == preds
-
-    calls = {"n": 0}
-    real = GraphTable._bucket_via_job
-
-    def counting(self, predicate):
-        calls["n"] += 1
-        return real(self, predicate)
-
-    monkeypatch.setattr(GraphTable, "_bucket_via_job", counting)
-    pred = f"{BASE}books#title"
-    df = gt.read_predicate(pred)
-    assert df.count() == triples.where(F.col("p_value") == pred).count()
-    assert calls["n"] == 0  # manifest hit: no bucket-computation job
-
-    # unknown predicate: fallback job runs exactly once across repeat queries
-    assert gt.read_predicate("http://nowhere/p").count() == 0
-    assert gt.read_predicate("http://nowhere/p").count() == 0
-    assert calls["n"] == 2  # two read_predicate calls hit the counting shim...
-    assert len(gt._bucket_cache) == 1  # ...but only one Spark job was memoized
-
-
 def test_graph_table_iceberg_write_contract(spark, tables, monkeypatch, tmp_path):
     """VERDICT r2 next-round #5: the Iceberg branches are the declared 100 TB
     production path but no jar ships in this sandbox — pin their call shape
     with a fake DataFrameWriterV2 so signature drift fails loudly:
     writeTo(<catalog.table>).using('iceberg').partitionedBy(bucket(K,
-    p_value)).createOrReplace() on overwrite; .append() on append; reads via
-    spark.table; bound-predicate reads filter p_value only (hidden
-    partitioning prunes)."""
+    p_value)).createOrReplace(); reads via spark.table; bound-predicate
+    reads filter p_value only (hidden partitioning prunes)."""
     calls = []
 
     class FakeWriter:
@@ -163,7 +167,7 @@ def test_graph_table_iceberg_write_contract(spark, tables, monkeypatch, tmp_path
         )
         assert gt.iceberg and gt.iceberg_ref == "fakecat.graph"
 
-        snap = gt.write(triples, mode="overwrite")
+        snap = gt.write(triples)
         assert snap == "4242"
         assert ("writeTo", "fakecat.graph") in calls and ("using", "iceberg") in calls
         pby = next(c for c in calls if c[0] == "partitionedBy")
@@ -171,10 +175,6 @@ def test_graph_table_iceberg_write_contract(spark, tables, monkeypatch, tmp_path
         assert ("createOrReplace",) in calls and ("append",) not in calls
         assert "fakecat.graph.snapshots" in sqls[-1]
 
-        calls.clear()
-        gt.write(triples, mode="append")
-        assert ("append",) in calls
-        assert not any(c[0] == "partitionedBy" for c in calls)  # spec fixed at creation
 
         tabled = []
         monkeypatch.setattr(
@@ -199,9 +199,7 @@ def test_graph_table_incremental_merge(spark, tables, tmp_path):
     first = triples.where(F.col("p_value").contains("books"))
     rest = triples  # overlaps `first` — the anti-join must drop the overlap
 
-    # closed_vocabulary so the manifest map drives the disjoint-predicate
-    # join skip asserted below; the generic path is covered separately
-    gt = GraphTable(spark, str(tmp_path / "gtm"), n_buckets=4, closed_vocabulary=True)
+    gt = GraphTable(spark, str(tmp_path / "gtm"), n_buckets=4)
     s1 = gt.merge(first)
     n1 = gt.current_snapshot()["total_rows"]
     assert n1 == first.distinct().count()
@@ -228,11 +226,8 @@ def test_graph_table_incremental_merge(spark, tables, tmp_path):
     # earlier snapshots stay readable (time travel along the chain)
     assert gt.read(s1).count() == n1
 
-    # disjoint-predicate delta: manifest bucket map proves no overlap is
-    # possible, so the anti-join is skipped entirely (no Join in the plan)
+    # disjoint-predicate delta: every batch row is new
     novel = triples.limit(5).withColumn("p_value", F.lit("http://new/pred"))
-    delta = gt._delta_against(gt.current_snapshot(), novel)
-    assert "Join" not in delta._jdf.queryExecution().optimizedPlan().toString()
     gt.merge(novel)
     assert gt.current_snapshot()["delta_rows"] == novel.distinct().count()
     assert gt.read_predicate("http://new/pred").count() == novel.distinct().count()
@@ -246,7 +241,7 @@ def test_graph_table_incremental_merge(spark, tables, tmp_path):
     assert delta2.count() == 0  # fully known -> empty
 
     # compaction: the chain collapses to a single-directory snapshot with
-    # identical content, a rebuilt bucket map, and time travel intact
+    # identical content and time travel intact
     pre = sorted(map(tuple, gt.read().collect()))
     chain_len = len(gt.current_snapshot()["dirs"])
     assert chain_len >= 3
@@ -255,7 +250,7 @@ def test_graph_table_incremental_merge(spark, tables, tmp_path):
     assert snapc["id"] == sc and "dirs" not in snapc  # single directory again
     assert snapc["lineage"]["chain_len"] == chain_len
     assert sorted(map(tuple, gt.read().collect())) == pre
-    assert set(snapc["pred_buckets"]) == {t[2] for t in pre}
+    assert snapc["total_rows"] == len(pre)
     assert gt.read(s1).count() == n1  # pre-compaction snapshots still readable
     # post-compaction merge anti-joins against ONE directory
     assert gt._delta_against(snapc, some).count() == 0
@@ -263,15 +258,12 @@ def test_graph_table_incremental_merge(spark, tables, tmp_path):
 
 def test_graph_table_write_single_input_scan(spark, tables, tmp_path, monkeypatch):
     """VERDICT r3 #4: a snapshot write must read its input EXACTLY ONCE —
-    the per-bucket counts and predicate->bucket map now ride the write's own
-    pass as Observation metrics, so ``_read_dirs`` (the former read-back
-    verification scan: a full extra scan per materialization at 100 TB) must
-    never run inside write(), and the manifest metrics must equal what the
-    read-back used to compute. (r5: row counts moved from Observation
-    metrics to parquet-footer metadata reads — still zero data scans;
-    the predicate map still rides the write pass for closed_vocabulary.)"""
+    ``_read_dirs`` (the former read-back verification scan: a full extra
+    scan per materialization at 100 TB) must never run inside write(), and
+    the manifest row count must equal what the read-back used to compute
+    (it comes from parquet-footer metadata reads, zero data scans)."""
     triples = direct_map(spark, tables, CONSTRAINTS, base=BASE)
-    gt = GraphTable(spark, str(tmp_path / "gtobs"), n_buckets=4, closed_vocabulary=True)
+    gt = GraphTable(spark, str(tmp_path / "gtobs"), n_buckets=4)
     calls = {"n": 0}
     real = GraphTable._read_dirs
 
@@ -284,9 +276,6 @@ def test_graph_table_write_single_input_scan(spark, tables, tmp_path, monkeypatc
     assert calls["n"] == 0, "write() ran a read-back scan"
     snap = gt.current_snapshot()
     assert snap["total_rows"] == triples.count()
-    preds = {r.p_value for r in triples.select("p_value").distinct().collect()}
-    assert set(snap["pred_buckets"]) == preds
-    assert sum(snap["partition_rows"].values()) == snap["total_rows"]
     assert snap["chain_len"] == 1
 
 
@@ -317,25 +306,6 @@ def test_graph_table_auto_compaction(spark, tables, tmp_path):
     # read plans stay bounded: at most max_chain_len scan branches
     plan = gt.read()._jdf.queryExecution().optimizedPlan().toString()
     assert plan.count("Relation") <= 2
-
-
-def test_graph_table_merge_forwards_first_write_hints(spark, tables, tmp_path, monkeypatch):
-    """ADVICE r3 #5: merge() on an empty table must forward the caller's
-    dedup/distribute hints to write(), so a huge already-distinct first
-    batch skips the full-key distinct shuffle and the write repartition."""
-    triples = direct_map(spark, tables, CONSTRAINTS, base=BASE)
-    gt = GraphTable(spark, str(tmp_path / "gth"), n_buckets=4)
-    seen = {}
-    real = GraphTable.write
-
-    def capture(self, df, mode="overwrite", lineage=None, dedup=False, distribute=True):
-        seen.update(dedup=dedup, distribute=distribute)
-        return real(self, df, mode=mode, lineage=lineage, dedup=dedup, distribute=distribute)
-
-    monkeypatch.setattr(GraphTable, "write", capture)
-    gt.merge(triples, dedup=False, distribute=False)
-    assert seen == {"dedup": False, "distribute": False}
-    assert gt.current_snapshot()["total_rows"] == triples.count()
 
 
 def test_graph_table_iceberg_merge_uses_merge_into(spark, tables, monkeypatch, tmp_path):
@@ -427,14 +397,11 @@ def test_graph_table_iceberg_merge_uses_merge_into(spark, tables, monkeypatch, t
 
 
 def test_graph_table_wide_vocabulary_caps(spark, tmp_path, monkeypatch):
-    """Wide-predicate-vocabulary guard rails: past MAX_MANIFEST_PREDICATES
-    the manifest stores NO predicate map (bound reads fall back to the
-    memoized bucket job, still correct); past MAX_PRUNE_PREDICATES the
+    """Wide-predicate-vocabulary guard rail: past MAX_PRUNE_PREDICATES the
     merge delta anti-joins the un-pruned parent instead of collecting the
     batch's predicate list driver-side (ADVICE r3 #3)."""
     from p5_rdf_rdb2rdf_spark.io import graph_table as gtmod
 
-    monkeypatch.setattr(gtmod, "MAX_MANIFEST_PREDICATES", 5)
     monkeypatch.setattr(gtmod, "MAX_PRUNE_PREDICATES", 5)
 
     wide = spark.range(40).select(
@@ -447,23 +414,14 @@ def test_graph_table_wide_vocabulary_caps(spark, tmp_path, monkeypatch):
         F.lit(None).cast("string").alias("o_lang"),
         F.lit(None).cast("string").alias("g_value"),
     )
-    # closed_vocabulary declared but WRONG (vocabulary wider than the cap):
-    # the cap must still drop the map and mark it incomplete
-    gt = gtmod.GraphTable(
-        spark, str(tmp_path / "gtw"), n_buckets=4, closed_vocabulary=True
-    )
+    gt = gtmod.GraphTable(spark, str(tmp_path / "gtw"), n_buckets=4)
     gt.write(wide)
     snap = gt.current_snapshot()
-    assert snap["pred_buckets"] == {}  # map dropped, manifest stays small
-    assert snap["pred_map_complete"] is False
-    assert snap["total_rows"] == 40  # counts still recorded
-    # bound-predicate read: fallback bucket job, correct result
+    assert snap["total_rows"] == 40
     assert gt.read_predicate("http://e/p7").count() == 1
 
-    # CAPPED-MAP REGRESSION (pre-r5 bug): a <=MAX_PRUNE_PREDICATES batch of
-    # triples the graph already knows must NOT skip the anti-join just
-    # because the (dropped) map doesn't list its predicates — that inference
-    # is only sound for a complete map; skipping appended duplicates here.
+    # a <=MAX_PRUNE_PREDICATES batch of triples the graph already knows:
+    # bucket-pruned anti-join, no duplicates appended
     known_small = wide.where(F.col("p_value").isin("http://e/p1", "http://e/p2"))
     delta_small = gt._delta_against(snap, known_small)
     assert delta_small.count() == 0  # fully known -> empty, via hash-pruned join
@@ -489,13 +447,13 @@ def test_graph_table_wide_vocabulary_caps(spark, tmp_path, monkeypatch):
 def test_graph_table_generic_path_collects_no_predicate_map(
     spark, tables, tmp_path, monkeypatch
 ):
-    """VERDICT r4 What's-wrong #1 / next-round #2: by DEFAULT (generic
-    vocabulary) write() must not run the collect_set Observation at all —
-    the metric materializes the full distinct predicate set in task buffers
-    and on the driver before any cap applies. The manifest then carries no
-    map, bound-predicate reads stay correct via the memoized fallback job,
-    and merge pruning computes buckets by pure hash: the anti-join is
-    bucket-pruned AND never skipped, so idempotence holds without the map."""
+    """VERDICT r4 What's-wrong #1 / next-round #2: write() must not run an
+    Observation pass at all — a collect_set of predicates materializes the
+    full distinct predicate set in task buffers and on the driver. Buckets
+    are recomputed from the predicate wherever needed: bound-predicate reads
+    prune by the folded bucket filter, and merge pruning hashes the batch's
+    predicates — the anti-join is bucket-pruned AND never skipped, so
+    re-merging known triples is idempotent."""
     triples = direct_map(spark, tables, CONSTRAINTS, base=BASE)
     gt = GraphTable(spark, str(tmp_path / "gtg"), n_buckets=4)
 
@@ -509,28 +467,25 @@ def test_graph_table_generic_path_collects_no_predicate_map(
 
     monkeypatch.setattr(df_cls, "observe", counting)
     gt.write(triples)
-    assert observed == []  # no Observation pass at all on the generic path
+    assert observed == []  # no Observation pass at all
     snap = gt.current_snapshot()
-    assert snap["pred_buckets"] == {} and snap["pred_map_complete"] is False
     assert snap["total_rows"] == triples.count()
-    assert sum(snap["partition_rows"].values()) == snap["total_rows"]
 
-    # bound-predicate read: fallback bucket job, pruned scan, correct rows
+    # bound-predicate read: pruned scan, correct rows
     pred = f"{BASE}books#title"
     df = gt.read_predicate(pred)
     assert df.count() == triples.where(F.col("p_value") == pred).count()
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "pred_bucket" in plan  # directory pruning still happens
 
-    # merge pruning without a map: hash-computed buckets prune the parent,
-    # the join still runs (never skipped on an incomplete map)
+    # merge pruning: hash-computed buckets prune the parent, the join runs
     some = triples.where(F.col("p_value") == pred)
     delta = gt._delta_against(snap, some)
     dplan = delta._jdf.queryExecution().optimizedPlan().toString()
     assert "Join" in dplan and "pred_bucket" in dplan
     assert delta.count() == 0  # fully known -> empty
     gt.merge(some)
-    assert gt.current_snapshot()["delta_rows"] == 0  # idempotent without map
+    assert gt.current_snapshot()["delta_rows"] == 0  # idempotent
     assert gt.read().count() == triples.count()
 
 
@@ -589,7 +544,7 @@ def test_graph_table_reopen_adopts_write_time_bucket_count(spark, tables, tmp_pa
     buckets and silently append duplicates (review r5)."""
     triples = direct_map(spark, {"dept": tables["dept"]}, CONSTRAINTS, base=BASE)
     path = str(tmp_path / "gtk")
-    gt = GraphTable(spark, path, n_buckets=8, closed_vocabulary=True)
+    gt = GraphTable(spark, path, n_buckets=8)
     gt.write(triples)
     assert gt.current_snapshot()["n_buckets"] == 8
 

@@ -25,12 +25,11 @@ def test_triple_store_patterns(spark, tables):
 
 
 def test_triple_store_graph_table_bound_predicate_one_pruned_scan(
-    spark, tables, tmp_path, monkeypatch
+    spark, tables, tmp_path
 ):
     """VERDICT r3 #7: a GraphTable-backed TripleStore must answer a bound-p
-    pattern through read_predicate's manifest bucket map — exactly one
-    pruned scan: (a) no bucket-computation job (manifest hit), (b) zero
-    extra Spark jobs versus calling read_predicate directly, (c) the scan
+    pattern through read_predicate — exactly one pruned scan: (a) zero
+    extra Spark jobs versus calling read_predicate directly, (b) the scan
     lists ONLY the predicate's bucket directory, and the answers match the
     DataFrame-backed store on every pattern shape."""
     from pyspark.sql import functions as F
@@ -38,26 +37,16 @@ def test_triple_store_graph_table_bound_predicate_one_pruned_scan(
     from p5_rdf_rdb2rdf_spark.io.graph_table import GraphTable
 
     triples = _full_graph(spark, tables)
-    # closed_vocabulary: the manifest bucket map only exists for tables that
-    # declare a bounded predicate set (r5; generic tables use the memoized
-    # 1-row fallback job instead)
-    gt = GraphTable(spark, str(tmp_path / "gts"), n_buckets=4, closed_vocabulary=True)
+    gt = GraphTable(spark, str(tmp_path / "gts"), n_buckets=4)
     gt.write(triples)
     store = TripleStore(gt)
     flat = TripleStore(triples)
     pred = f"{BASE}books#title"
 
-    calls = {"n": 0}
-    real = GraphTable._bucket_via_job
-
-    def counting(self, predicate):
-        calls["n"] += 1
-        return real(self, predicate)
-
-    monkeypatch.setattr(GraphTable, "_bucket_via_job", counting)
-
     df = store.get_statements(p=pred)
-    bucket = gt.current_snapshot()["pred_buckets"][pred]
+    bucket = spark.range(1).select(
+        F.pmod(F.xxhash64(F.lit(pred)), F.lit(4)).cast("int").alias("b")
+    ).head().b
     # the scan must carry the bucket as a PARTITION filter (directory-level
     # pruning before any file is opened; inputFiles() can't show this — it
     # reports the pre-pruning relation)
@@ -66,7 +55,6 @@ def test_triple_store_graph_table_bound_predicate_one_pruned_scan(
 
     pf = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
     assert pf and f"pred_bucket#" in pf.group(1) and f"= {bucket})" in pf.group(1), plan
-    assert calls["n"] == 0  # manifest hit: no bucket job scheduled
 
     sc = spark.sparkContext
     store.get_statements(p=pred).count()  # warm filesystem/codegen caches
@@ -332,78 +320,18 @@ def test_bgp_virtual_store_matches_materialized(spark, tables):
 class _ProbeStore:
     """Records the ORDER in which match_bgp schedules patterns (each
     pattern's frame is built via exactly one get_statements call, in join
-    order — the first call is the seed/anchor). Delegates everything."""
+    order — the first call is the seed/anchor). Delegates everything,
+    including ``estimate_pattern_rows`` only when the inner store has one."""
 
     def __init__(self, inner):
         self.inner = inner
         self.calls: list[tuple] = []
+        if hasattr(inner, "estimate_pattern_rows"):
+            self.estimate_pattern_rows = inner.estimate_pattern_rows
 
     def get_statements(self, s=None, p=None, o=None, **kw):
         self.calls.append((s, p, o))
         return self.inner.get_statements(s=s, p=p, o=o, **kw)
-
-    def estimate_pattern_rows(self, **kw):
-        return self.inner.estimate_pattern_rows(**kw)
-
-
-def test_bgp_cardinality_ordering_anchors_smallest(spark, tmp_path):
-    """VERDICT r5 #6: on a GraphTable-backed store the BGP matcher orders
-    patterns by the manifest's per-bucket row counts — a 1-bound pattern on
-    a RARE predicate must anchor the join ahead of a 2-bound pattern on a
-    predicate matching most of the graph (bound-count ordering scheduled
-    the big one first). Estimates come from the manifest with zero jobs."""
-    from p5_rdf_rdb2rdf_spark.io.graph_table import GraphTable
-    from p5_rdf_rdb2rdf_spark.store import match_bgp
-
-    gt = GraphTable(
-        spark, str(tmp_path / "gt_card"), n_buckets=16, closed_vocabulary=True
-    )
-    common = "http://p/common"
-    # pick a rare-predicate name hashing to a DIFFERENT bucket (xxhash64 is
-    # deterministic; the loop just documents the requirement)
-    cb = gt._bucket_via_job(common)
-    rare = next(
-        c for c in (f"http://p/rare{i}" for i in range(20))
-        if gt._bucket_via_job(c) != cb
-    )
-    schema = (
-        "s_kind string, s_value string, p_value string, o_kind string, "
-        "o_value string, o_datatype string, o_lang string, g_value string"
-    )
-    rows = [
-        ("iri", f"http://s/{i}", common, "literal", f"v{i % 7}", None, None, None)
-        for i in range(500)
-    ] + [
-        ("iri", f"http://s/{i}", rare, "iri", f"http://t/{i}", None, None, None)
-        for i in range(3)
-    ]
-    gt.write(spark.createDataFrame(rows, schema))
-    store = TripleStore(gt)
-
-    est_rare = store.estimate_pattern_rows(p=rare)
-    est_common = store.estimate_pattern_rows(p=common)
-    assert est_rare is not None and est_common is not None
-    assert est_rare < est_common
-    # complete map + unknown predicate => provably 0; unbound p => total
-    assert store.estimate_pattern_rows(p="http://p/nowhere") == 0
-    assert store.estimate_pattern_rows() == 503
-    # DataFrame-backed stores have no estimate (bound-count fallback)
-    assert TripleStore(gt.read()).estimate_pattern_rows(p=rare) is None
-
-    probe = _ProbeStore(store)
-    q = [
-        ("?x", common, "v3"),   # 2-bound, huge bucket: old ordering seeded it
-        ("?x", rare, "?z"),     # 1-bound, 3-row bucket: must anchor now
-    ]
-    out = match_bgp(probe, q)
-    assert probe.calls[0] == (None, rare, None)
-    assert probe.calls[1] == (None, common, "v3")
-    # and the answers are right: s/0..2 carry rare; of those, v3 needs i%7==3
-    got = sorted((r.x.value, r.z.value) for r in out.collect())
-    want = sorted(
-        (f"http://s/{i}", f"http://t/{i}") for i in range(3) if i % 7 == 3
-    )
-    assert got == want
 
 
 def test_bgp_ask_patterns_are_terminal(spark, tables):
@@ -449,58 +377,3 @@ def test_dm_estimate_s_bound_var_predicate_bound_object_width(spark, tables):
         )
         == 1
     )
-
-
-def test_bgp_ordering_survives_merge_chain_counts(spark, tmp_path):
-    """VERDICT r6 #4: after merges, ``partition_rows`` must describe the
-    WHOLE chain. Planted misorder: the newest delta carries FEWER rows of
-    the common predicate than the rare predicate has in total, so
-    delta-only counts would anchor the huge common pattern first; the
-    folded chain counts anchor the rare pattern."""
-    from p5_rdf_rdb2rdf_spark.io.graph_table import GraphTable
-    from p5_rdf_rdb2rdf_spark.store import match_bgp
-
-    gt = GraphTable(
-        spark, str(tmp_path / "gt_chain"), n_buckets=16, closed_vocabulary=True
-    )
-    common = "http://p/common"
-    cb = gt._bucket_via_job(common)
-    rare = next(
-        c for c in (f"http://p/rare{i}" for i in range(20))
-        if gt._bucket_via_job(c) != cb
-    )
-    schema = (
-        "s_kind string, s_value string, p_value string, o_kind string, "
-        "o_value string, o_datatype string, o_lang string, g_value string"
-    )
-    base = [
-        ("iri", f"http://s/{i}", common, "literal", f"v{i % 7}", None, None, None)
-        for i in range(500)
-    ]
-    gt.write(spark.createDataFrame(base, schema))
-    delta = [
-        ("iri", f"http://s/{i}", common, "literal", f"v{i % 7}", None, None, None)
-        for i in range(500, 502)  # only 2 NEW common rows in the delta
-    ] + [
-        ("iri", f"http://s/{i}", rare, "iri", f"http://t/{i}", None, None, None)
-        for i in range(3)
-    ]
-    gt.merge(spark.createDataFrame(delta, schema))
-    snap = gt.current_snapshot()
-    assert snap["chain_len"] == 2
-    # folded invariant: bucket counts sum to the chain total
-    assert sum(snap["partition_rows"].values()) == snap["total_rows"] == 505
-
-    store = TripleStore(gt)
-    assert store.estimate_pattern_rows(p=common) >= 502  # not the delta's 2
-    probe = _ProbeStore(store)
-    out = match_bgp(
-        probe,
-        [("?x", common, "v3"), ("?x", rare, "?z")],
-    )
-    assert probe.calls[0] == (None, rare, None)  # rare still anchors
-    got = sorted((r.x.value, r.z.value) for r in out.collect())
-    want = sorted(
-        (f"http://s/{i}", f"http://t/{i}") for i in range(3) if i % 7 == 3
-    )
-    assert got == want
